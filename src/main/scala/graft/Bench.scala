@@ -21,18 +21,22 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // ERROR, not WARN: the per-query function re-registration WARNs land
-    // on stderr DURING the run; if the harness merges streams they could
-    // interleave after the final stdout JSON line. Nothing bench-relevant
-    // logs below ERROR.
+    // ERROR, not WARN: WARNs land on stderr DURING the run; if the
+    // harness merges streams they could interleave after the final
+    // stdout JSON line. Nothing bench-relevant logs below ERROR.
     spark.sparkContext.setLogLevel("ERROR")
     // Full materialization without a collect: the noop sink executes the
     // whole plan (count() would let the optimizer prune projected
     // columns and under-measure map-only queries).
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A failed lane reads -1.0; its cause goes to stderr.
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // warm-up: JVM/JIT + codegen + parquet footer caches, not timed
@@ -42,7 +46,7 @@ object Bench {
     // kernel-backed query isn't charged JVM warm-up it didn't cause
     try {
       import spark.implicits._
-      graft.functions.TextExpressions.register(spark)
+      graft.functions.Kernels.install(spark)
       (1 to 5000).map(i => s"warm up the native text kernels pass $i").toDF("text")
         .selectExpr("minhash_sig(text, 8) AS a", "char_ngram_set(text, 4) AS b",
           "simhash60(text) AS c", "word_shingle_set(text) AS d")
@@ -182,9 +186,10 @@ object Bench {
     // the lane's wall could have used (absolute floor 2 cpu-s so stray
     // jiffies can't flag sub-second lanes), and ANY poisoned lane marks
     // the attempt noisy → the retry loop re-runs it.
-    def oncePlusSteal(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+    def oncePlusSteal(name: String,
+                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       val s0 = stealJiffies()
-      val sec = once(fn)
+      val sec = once(name, fn)
       val s1 = stealJiffies()
       (sec, if (s0 < 0 || s1 < 0) 0.0 else (s1 - s0) / 100.0)
     }
@@ -197,13 +202,13 @@ object Bench {
       val calibA = calibProbe()
       val bwA = bwProbe()
       val res1 = firstHalf.map { case (name, fn) =>
-        name -> (oncePlusSteal(fn), oncePlusSteal(fn)) }
+        name -> (oncePlusSteal(name, fn), oncePlusSteal(name, fn)) }
       val stealB = stealJiffies()
       val wall1 = System.nanoTime()
       val calibB = calibProbe()
       val bwB = bwProbe()
       val res2 = secondHalf.map { case (name, fn) =>
-        name -> (oncePlusSteal(fn), oncePlusSteal(fn)) }
+        name -> (oncePlusSteal(name, fn), oncePlusSteal(name, fn)) }
       val stealC = stealJiffies()
       val wall2 = System.nanoTime()
       val calibC = calibProbe()

@@ -36,21 +36,29 @@ package graft
   * from executor count anyway.
   */
 object Sizing {
-  def parquetBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else if (f.getName.endsWith(".parquet")) f.length()
-      else 0L
-    walk(new java.io.File(dir))
+  /** (file count, bytes) of the `.parquet` files under `dir` — one file,
+    * a directory tree, or nothing at all (0, 0) — in one recursive
+    * listing through the Hadoop FileSystem, so a `file:`, `hdfs:` or
+    * `s3a:` root sizes like a plain local path (the filesystem settings
+    * come from the classpath's core-site.xml, as for any Hadoop client).
+    */
+  private def parquetFiles(dir: String): (Int, Long) = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    if (!fs.exists(path)) return (0, 0L)
+    val it = fs.listFiles(path, true)
+    var files = 0
+    var bytes = 0L
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) { files += 1; bytes += st.getLen }
+    }
+    (files, bytes)
   }
 
-  def parquetFileCount(dir: String): Int = {
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0)
-      else if (f.getName.endsWith(".parquet")) 1
-      else 0
-    walk(new java.io.File(dir))
-  }
+  def parquetBytes(dir: String): Long = parquetFiles(dir)._2
+
+  def parquetFileCount(dir: String): Int = parquetFiles(dir)._1
 
   def shufflePartitions(sfDir: String, cores: Int,
                         bytesPerPartition: Long = 8L << 20,

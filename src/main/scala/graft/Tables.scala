@@ -74,8 +74,6 @@ object Tables {
     * re-derives the partition filter below the projection.
     */
   def eventsNanos(spark: SparkSession, dir: String): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_EVENTS_LAYOUT").contains("flat"))
-      return rawEventsNanos(spark, dir) // measurement bypass, not a mode
     plans.EventTimeDayPruning.install(spark)
     val root = eventsLakeRoot(spark, dir)
     // Memoize the scan relation per (session, root): building a fresh

@@ -53,6 +53,16 @@ class ContractSpec extends AnyFunSuite {
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  test("Sizing lists through the Hadoop FileSystem: a path and its file:// URI agree") {
+    val plain = s"$sf/events.parquet"
+    val uri = s"file://$plain"
+    assert(Sizing.parquetBytes(plain) == java.nio.file.Files.size(java.nio.file.Paths.get(plain)))
+    assert(Sizing.parquetFileCount(plain) == 1)
+    assert(Sizing.parquetBytes(uri) == Sizing.parquetBytes(plain))
+    assert(Sizing.parquetFileCount(uri) == Sizing.parquetFileCount(plain))
+    assert(Sizing.parquetBytes(s"$sf/no_such_table.parquet") == 0L)
+  }
+
   test("signature passes are mapper-only: no exchange in the plan") {
     val docs = Tables(spark, sf, "documents")
     val sig = operators.Dedup.minhashSignature(docs, "doc_id", "text", 8)

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions wires vec_dot/num_gcd/num_lcm into a session via
-  * spark.sql.extensions — the cluster-deployment registration path.
+/** GraftExtensions wires every row of the kernel table
+  * (graft.functions.Kernels), the admin DCL parser and the event-time
+  * pruning rule into a session via spark.sql.extensions — the
+  * cluster-deployment path.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -128,28 +130,42 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(b.getString(0) != null && b.getString(1) != null)
   }
 
-  test("extensions registry is in lockstep with every temp-function registry") {
-    // r9: the extensions path had drifted 10 functions behind the
-    // library's per-session registries — a cluster deploying via
-    // spark.sql.extensions would silently lack kernels the library's
-    // own entry points use. The temp registrations in the source files
-    // are the ground truth (a newSession inherits the injected
-    // registry, so a runtime diff can't see them): scrape every
-    // createOrReplaceTempFunction name and require it to resolve in
-    // the extensions-built session.
+  test("every kernel-table row resolves in SQL and builds a sessionless Column") {
+    // One table feeds all three surfaces, so the check is a loop over
+    // it: the extension-built session, install() on a session that
+    // lacks the names, and the registry-free Column path.
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val srcDir = java.nio.file.Paths.get("src/main/scala/graft/functions")
-    import scala.jdk.CollectionConverters._
-    val rx = """createOrReplaceTempFunction\(\s*"([a-z0-9_]+)"""".r
-    val kernels = java.nio.file.Files.list(srcDir).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap(p => rx.findAllMatchIn(java.nio.file.Files.readString(p))
-        .map(_.group(1)))
-      .toSet
-    assert(kernels.size >= 30, s"source scrape implausibly small: $kernels")
-    val missing = kernels.filterNot(n => spark.sessionState.functionRegistry
-      .functionExists(FunctionIdentifier(n)))
-    assert(missing.isEmpty, s"functions missing from GraftExtensions: $missing")
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    import graft.functions.Kernels
+    val names = Kernels.table.map(_._1)
+    assert(names.size >= 37 && names.distinct == names, s"table rows: $names")
+    def missing(s: SparkSession) = names.filterNot(n =>
+      s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(missing(spark).isEmpty, s"missing from the extension-built session: ${missing(spark)}")
+    // a newSession inherits the injected registry, so drop the names
+    // first: install must then bring every one of them back
+    val fresh = spark.newSession()
+    names.foreach(n => fresh.sessionState.functionRegistry.dropFunction(FunctionIdentifier(n)))
+    assert(missing(fresh) == names)
+    Kernels.install(fresh)
+    assert(missing(fresh).isEmpty, s"missing after install: ${missing(fresh)}")
+    val d = fresh.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head.getDouble(0)
+    assert(d == 11.0)
+    // every row builds a Column with no active session on this thread,
+    // straight from its Catalyst expression (no registry lookup)
+    SparkSession.clearActiveSession()
+    try {
+      assert(SparkSession.getActiveSession.isEmpty)
+      names.foreach { n =>
+        val built = (0 to 2).iterator
+          .map(k => scala.util.Try(Kernels.column(n, Seq.fill(k)(col("x")): _*)))
+          .collectFirst { case scala.util.Success(c) => ColumnBridge.expression(c) }
+        assert(built.isDefined, s"$n builds no Column at 0-2 arguments")
+        assert(!built.get.exists(_.isInstanceOf[UnresolvedFunction]), s"$n: ${built.get}")
+      }
+    } finally SparkSession.setActiveSession(spark)
   }
 
   test("zorder_key interleaves bits: x at even positions, y at odd") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.Kernels
 import graft.operators.{Multimodal, Sampling, Similarity, TextAnalysis}
 
 class PipelineSpec extends AnyFunSuite {
@@ -115,13 +116,12 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0))).toDF("a", "b")
-    graft.functions.VectorExpressions.register(spark)
-    val native = df.select(call_function("vec_dot", col("a"), col("b"))).head.isNullAt(0)
+    val native = df.select(Kernels.column("vec_dot", col("a"), col("b"))).head.isNullAt(0)
     val hof = df.select(aggregate(zip_with(col("a"), col("b"), (p, q) => p * q),
       lit(0.0), (acc, v) => acc + v)).head.isNullAt(0)
     assert(native && hof, "mismatched lengths must yield NULL on both dot() paths")
     val eq = Seq((Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
-      .select(call_function("vec_dot", col("a"), col("b"))).head.getDouble(0)
+      .select(Kernels.column("vec_dot", col("a"), col("b"))).head.getDouble(0)
     assert(eq == 11.0)
   }
 
@@ -191,11 +191,10 @@ class PipelineSpec extends AnyFunSuite {
   test("vec_dot_i8 kernel: exact integer dot, length mismatch is NULL") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val df = Seq((Seq(127, -128, 3), Seq(127, 127, -2)),
         (Seq(1, 2, 3), Seq(1, 2))) // mismatch
       .toDF("a", "b")
-      .select(call_function("vec_dot_i8",
+      .select(Kernels.column("vec_dot_i8",
         col("a").cast("array<tinyint>"), col("b").cast("array<tinyint>")).as("d"))
       .collect()
     assert(df(0).getLong(0) == 127L * 127 - 128L * 127 - 6L)
@@ -326,10 +325,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("native word_shingle_set matches the explode-distinct formulation") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
     val docs = Tables(spark, sf, "documents").limit(100)
     val native = docs.select(col("doc_id"),
-        explode(call_function("word_shingle_set", col("text"))).as("sh"))
+        explode(Kernels.column("word_shingle_set", col("text"))).as("sh"))
     val relational = graft.operators.Dedup.shingleRows(docs, "doc_id", "text")
     assert(native.exceptAll(relational).isEmpty && relational.exceptAll(native).isEmpty,
       "kernel shingle set must equal the exploded distinct shingle rows")
@@ -338,7 +336,6 @@ class PipelineSpec extends AnyFunSuite {
   test("text-stat kernels match their regex formulations exactly") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
     val tricky = Seq(
       "The_the the5 the-the THE it", // boundary traps: _ and digits join \w runs
       "a a a  AND and_of of",
@@ -349,13 +346,13 @@ class PipelineSpec extends AnyFunSuite {
     ).toDF("text")
     val corpus = Tables(spark, sf, "documents").select("text").unionByName(tricky)
     val checked = corpus.select(
-      (call_function("word_set_count", col("text"), lit("the,and,of,to,a,in,is,it")) ===
+      (Kernels.column("word_set_count", col("text"), lit("the,and,of,to,a,in,is,it")) ===
         regexp_count(lower(col("text")), lit("\\b(the|and|of|to|a|in|is|it)\\b"))).as("w_ok"),
-      (call_function("char_set_count", col("text"), lit("的了是在我有")) ===
+      (Kernels.column("char_set_count", col("text"), lit("的了是在我有")) ===
         regexp_count(lower(col("text")), lit("(的|了|是|在|我|有)"))).as("c_ok"),
-      (call_function("non_alnum_space_count", col("text")) ===
+      (Kernels.column("non_alnum_space_count", col("text")) ===
         regexp_count(lower(col("text")), lit("[^a-z0-9 ]"))).as("p_ok"),
-      (call_function("bpe_token_count", col("text")) ===
+      (Kernels.column("bpe_token_count", col("text")) ===
         regexp_count(lower(col("text")), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"))).as("b_ok"))
       .collect()
     assert(checked.nonEmpty)
@@ -366,10 +363,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("native char_ngram_set + array_overlap_count match the HOF formulation") {
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
     val docs = Tables(spark, sf, "documents").limit(100)
     val native = docs.select(col("doc_id"),
-      call_function("char_ngram_set", col("text"), lit(4)).as("g"))
+      Kernels.column("char_ngram_set", col("text"), lit(4)).as("g"))
     val hof = docs.select(col("doc_id"),
       graft.operators.Dedup.charNgrams(col("text"), 4).as("g"))
     val joined = native.withColumnRenamed("g", "gn")
@@ -377,7 +373,7 @@ class PipelineSpec extends AnyFunSuite {
       .select(col("doc_id"),
         (size(col("gn")) === size(col("gh")) &&
           size(array_except(col("gn"), col("gh"))) === 0).as("same_set"),
-        call_function("array_overlap_count", col("gn"), col("gh")).as("ovl"),
+        Kernels.column("array_overlap_count", col("gn"), col("gh")).as("ovl"),
         size(col("gn")).as("szn"))
       .collect()
     assert(joined.length == 100)
@@ -721,12 +717,11 @@ class PipelineSpec extends AnyFunSuite {
   test("ws_normalize kernel matches the regex formulation; fingerprint is stable") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
     val tricky = Seq("a  b\t\tc\nd", " lead", "trail ", "\t\n\f\r", "", "one",
       "x\r\ny  \t z").toDF("text")
     val corpus = Tables(spark, sf, "documents").select("text").unionByName(tricky)
     val checked = corpus.select(
-      (call_function("ws_normalize", col("text")) ===
+      (Kernels.column("ws_normalize", col("text")) ===
         regexp_replace(col("text"), "\\s+", " ")).as("ok")).collect()
     assert(checked.nonEmpty && checked.forall(_.getAs[Boolean]("ok")))
     // fingerprint built on the kernel equals the regex-built fingerprint
@@ -740,7 +735,6 @@ class PipelineSpec extends AnyFunSuite {
   test("rep_stats kernel matches the explode-groupBy formulation") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.TextExpressions.register(spark)
     val tricky = Seq((9001L, "a b a b a"), (9002L, "x"), (9003L, ""),
       (9004L, "x y"), (9005L, "w w w w")).toDF("doc_id", "text")
     val corpus = Tables(spark, sf, "documents").select("doc_id", "text")
@@ -885,12 +879,11 @@ class PipelineSpec extends AnyFunSuite {
 
   test("simhashNearDups equals brute-force Hamming pairs (pigeonhole completeness)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col => c, conv, call_function}
+    import org.apache.spark.sql.functions.{col => c, conv}
     val docs = Tables(spark, sf, "documents").select("doc_id", "text").limit(120)
     // brute force over the actual 60-bit signatures
-    graft.functions.TextExpressions.register(spark)
     val sigs = docs.select(c("doc_id"),
-        conv(call_function("simhash60", c("text")), 16, 10).cast("long").as("s"))
+        conv(Kernels.column("simhash60", c("text")), 16, 10).cast("long").as("s"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val brute = (for {
       (a, sa) <- sigs; (b, sb) <- sigs
@@ -1449,9 +1442,8 @@ class PipelineSpec extends AnyFunSuite {
   test("tokenBudgetMix: per-language budgets respected, hash-prefix property, sqrt flattening") {
     import org.apache.spark.sql.functions._
     val docs = Tables(spark, sf, "documents")
-    graft.functions.TextExpressions.register(spark)
     val tok = docs.select(col("doc_id"), col("lang"),
-      call_function("bpe_token_count", col("text")).cast("long").as("n_tok"))
+      Kernels.column("bpe_token_count", col("text")).cast("long").as("n_tok"))
     val sel = Sampling.tokenBudgetMix(tok, "doc_id", "lang", "n_tok", budget = 5000L)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(sel.nonEmpty)
@@ -1483,9 +1475,8 @@ class PipelineSpec extends AnyFunSuite {
   test("tokenBudgetMix: shard-count invariance (distributed prefix == single window) and zero-mass language") {
     import org.apache.spark.sql.functions._
     val docs = Tables(spark, sf, "documents")
-    graft.functions.TextExpressions.register(spark)
     val tok = docs.select(col("doc_id"), col("lang"),
-      call_function("bpe_token_count", col("text")).cast("long").as("n_tok"))
+      Kernels.column("bpe_token_count", col("text")).cast("long").as("n_tok"))
     // the shard count is a pure parallelism knob: a shard is a
     // contiguous range of the order key, so per-shard cumsum + the
     // broadcast shard offsets reconstruct the global prefix EXACTLY
@@ -1842,13 +1833,12 @@ class PipelineSpec extends AnyFunSuite {
 
   test("winnow_set kernel matches the plain-Scala winnowing reference on ASCII text") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{call_function, col}
-    graft.functions.TextExpressions.register(spark)
+    import org.apache.spark.sql.functions.col
     val texts = Seq("the quick brown fox jumps over the lazy dog",
       "short", "exactly8", "abcdefghi",
       ("lorem ipsum dolor sit amet " * 10).trim)
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val got = df.select(col("id"), call_function("winnow_set", col("text")).as("f"))
+    val got = df.select(col("id"), Kernels.column("winnow_set", col("text")).as("f"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     texts.zipWithIndex.foreach { case (t, i) =>
       val want = TextAnalysis.winnow(t).distinct.sorted
@@ -2073,13 +2063,12 @@ class PipelineSpec extends AnyFunSuite {
     val nQuality = quality.count()
     assert(nQuality < nRaw) // the length gate fires on this corpus
     // decontamination drops the benchmark docs themselves at minimum
-    graft.functions.TextExpressions.register(spark)
     val bench = docs.filter(col("doc_id") < 50)
     val bsh = broadcast(bench.select(
-      explode(call_function("word_shingle_set", col("text"))).as("sh")).distinct())
+      explode(Kernels.column("word_shingle_set", col("text"))).as("sh")).distinct())
     val clean = quality.join(
       quality.select(col("doc_id"),
-          call_function("word_shingle_set", col("text")).as("__shs"))
+          Kernels.column("word_shingle_set", col("text")).as("__shs"))
         .select(col("doc_id"), size(col("__shs")).as("nsh"),
           explode(col("__shs")).as("sh"))
         .join(bsh, Seq("sh"), "left_semi")
